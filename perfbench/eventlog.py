@@ -2,9 +2,10 @@
 
 Benchmark phases label their Spark jobs with ``setJobGroup``; every figure
 here is summed over the jobs of one group.  SQL metrics (Python worker time,
-Arrow bytes, scan time, commit time) are resolved to ``(plan node, metric)``
-through the accumulator ids in the SQL plan events, so two nodes' "number of
-output rows" are never mixed up.
+Arrow bytes, scan time, commit time) are resolved to ``(plan node, metric,
+SQL execution)`` through the accumulator ids in the SQL plan events, so two
+nodes' "number of output rows", or the scans of two queries of one job
+group, are never mixed up.
 """
 
 from __future__ import annotations
@@ -41,18 +42,20 @@ class EventLog:
         self.jobs: dict[int, dict] = {}
         self.stages: dict[int, dict] = {}
         self.tasks: list[dict] = []
-        self.accum: dict[int, tuple[str, str, str]] = {}  # id -> (node, metric, type)
+        # accumulator id -> (node, metric, type, SQL execution id)
+        self.accum: dict[int, tuple[str, str, str, int]] = {}
         self.driver_updates: dict[int, list[tuple[int, int]]] = defaultdict(list)
         for path in files:
             with open(path) as fh:
                 for line in fh:
                     self._event(json.loads(line))
 
-    def _plan(self, node: dict) -> None:
+    def _plan(self, node: dict, execution: int) -> None:
         for m in node.get("metrics", ()):
-            self.accum[m["accumulatorId"]] = (node["nodeName"], m["name"], m["metricType"])
+            self.accum[m["accumulatorId"]] = (node["nodeName"], m["name"], m["metricType"],
+                                              execution)
         for child in node.get("children", ()):
-            self._plan(child)
+            self._plan(child, execution)
 
     def _event(self, e: dict) -> None:
         kind = e["Event"]
@@ -87,7 +90,7 @@ class EventLog:
             })
         elif kind.endswith("SparkListenerSQLExecutionStart") or kind.endswith(
                 "SparkListenerSQLAdaptiveExecutionUpdate"):
-            self._plan(e["sparkPlanInfo"])
+            self._plan(e["sparkPlanInfo"], int(e["executionId"]))
         elif kind.endswith("SparkListenerDriverAccumUpdates"):
             self.driver_updates[e["executionId"]].extend(
                 (int(i), int(v)) for i, v in e["accumUpdates"])
@@ -105,7 +108,7 @@ class Group:
         stage_ids = set().union(*(j["stages"] for j in jobs)) if jobs else set()
         self.tasks = [t for t in log.tasks if t["stage"] in stage_ids]
         executions = {int(j["execution"]) for j in jobs if j["execution"] is not None}
-        self.sql: dict[tuple[str, str], float] = defaultdict(float)
+        self.sql: dict[tuple[str, str, int], float] = defaultdict(float)
         for t in self.tasks:
             for acc_id, value in t["accums"]:
                 self._add(acc_id, value)
@@ -116,19 +119,26 @@ class Group:
     def _add(self, acc_id: int, value: float) -> None:
         meta = self.log.accum.get(acc_id)
         if meta is not None:
-            node, metric, mtype = meta
-            self.sql[(node, metric)] += value * _SCALE.get(mtype, 1)
+            node, metric, mtype, execution = meta
+            self.sql[(node, metric, execution)] += value * _SCALE.get(mtype, 1)
 
-    def sql_metric(self, metric: str, node: str | None = None) -> float:
-        return sum(v for (n, m), v in self.sql.items()
-                   if m == metric and (node is None or n == node))
+    def sql_metric(self, metric: str, node: str | None = None,
+                   executions: set[int] | None = None) -> float:
+        return sum(v for (n, m, ex), v in self.sql.items()
+                   if m == metric and (node is None or n == node)
+                   and (executions is None or ex in executions))
+
+    def kernel_executions(self) -> set[int]:
+        """SQL executions whose plan runs the Python kernel (not, say, the
+        lineage query that reads the written output back)."""
+        return {ex for (n, m, ex) in self.sql if m == "time to run Python workers"}
 
     def task_sum(self, field: str) -> float:
         return sum(t[field] for t in self.tasks)
 
     def kernel_tasks(self) -> list[dict]:
         """Tasks that ran the Python kernel (they report Python worker time)."""
-        ids = {i for i, (n, m, _) in self.log.accum.items()
+        ids = {i for i, (_, m, _, _) in self.log.accum.items()
                if m == "time to run Python workers"}
         return [t for t in self.tasks if any(a in ids for a, _ in t["accums"])]
 

@@ -1,19 +1,26 @@
 """Seeded benchmark inputs: generation, on-disk cache, properties, oracle.
 
-Two transcript tables are generated, each from ``--seed``:
+Two transcript tables are generated from ``--seed``.  Keys, roles and
+timestamps come from ``sources.transcripts.generate_transcripts_pdf``, and so
+does every payload: the generator's own html, pdf and plain/markdown payloads
+(its 600-variant pools), sorted into kinds by ``core.classify.classify_one``.
+Their sizes are therefore the program's synthetic-transcript sizes (html
+about 1.1 KB, pdf about 0.5 KB, plain about 150 B at the median).
 
-* ``mixed``  — every payload distinct; kind counts fixed at 40/30/30
-  html/pdf/plain; sizes heavy-tailed, with 0.1% of the turns being
-  100 KB-1 MB html/pdf tool outputs.  Used by ``batch_mixed_unique`` and
-  ``checkpoint_resume``.
-* ``pooled`` — at least 85% short (<= 300 B) plain/markdown turns, every
-  payload drawn from the fixed 600-variant pools of
-  ``sources.transcripts``, so at most 1% of the payloads are distinct.
+* ``mixed``  — every payload distinct: the pools of as many seeded tables as
+  it takes, each payload used once.  Kind counts fixed at 40/30/30
+  html/pdf/plain (FIXTURES.md).  0.1% of the turns are 100 KB-1 MB html/pdf
+  tool outputs, each assembled from many of those payloads (the articles of
+  html pages in one page; pdf payloads as the pages of one document).  Used
+  by ``batch_mixed_unique`` and ``checkpoint_resume``.
+* ``pooled`` — 95% short (<= 300 B) plain/markdown turns, the rest of the
+  kinds as the generator drew them, every payload from the seed's pools,
+  capped so that under 1% of the payloads are distinct.  With 95% short
+  plain, the html and pdf parsers take about an eighth of the kernel time.
 
-Only the payload *content* and the order of rows within a file depend on the
-seed.  Row count, kind counts, payload sizes, each file's share of them and
-the row positions of the large payloads are fixed, so runs with different
-seeds do the same amount of work in the same tasks.
+Row count, kind counts, the share of each kind per file and the row
+positions and sizes of the large payloads are the same for every seed; the
+payloads themselves and their order depend on it.
 
 A table is written once as multi-file parquet under the cache directory,
 together with its oracle output (``core.extract.extract_one`` row by row, in
@@ -24,10 +31,9 @@ content fingerprint.  Generation is never part of any timed section.
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
-import random
-import re
 import shutil
 import subprocess
 import sys
@@ -39,7 +45,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 # bump when generation changes, so cached inputs are not reused
-GEN_VERSION = 4
+GEN_VERSION = 5
 N_FILES = 8
 ORACLE_PROCS = 4
 
@@ -73,128 +79,63 @@ ORACLE_SCHEMA = pa.schema([
     pa.field("parse_failed", pa.bool_()),
 ])
 
-VOCAB = (
-    "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima "
-    "mike november oscar papa quebec romeo sierra tango uniform victor whiskey "
-    "xray yankee zulu data query table column filter window merge batch stream "
-    "latency replica shard ledger vector kernel cache index commit rollback "
-    "partition schema tensor gradient token parser lexer planner executor "
-    "quorum lease beacon harbor meadow canyon glacier lantern orchard summit"
-).split()
-
-_PDF_LINE = re.compile(r"^\S+@-?\d+(?:\.\d+)?,-?\d+(?:\.\d+)?$")
+# ``generate_transcripts_pdf`` builds its 600-variant pools per kind before it
+# samples turns from them; at this many conversations nearly every variant
+# appears in the table
+POOL_CONVS = 700
+SHORT_BYTES = 300
+POOLED_SHORT_FRAC = 0.95
 
 
-# --------------------------------------------------------------------------
-# payload builders (mixed table)
-# --------------------------------------------------------------------------
+def _pool_payloads(seed: int) -> dict[str, list[str]]:
+    """The distinct payloads of one ``sources.transcripts`` table, by the
+    kind ``core.classify.classify_one`` gives them (edge rows left out)."""
+    from document_extraction_spark.core.classify import classify_one
+    from document_extraction_spark.sources.transcripts import generate_transcripts_pdf
 
-def _words(rng: random.Random, n: int) -> list[str]:
-    return rng.choices(VOCAB, k=max(n, 1))
+    pdf = generate_transcripts_pdf(POOL_CONVS, seed)
+    out: dict[str, list[str]] = {"html": [], "pdf": [], "plain": []}
+    for text in pd.unique(pdf.loc[~pdf["conv_id"].str.startswith("conv-edge-"), "text"]):
+        out[classify_one(text)].append(text)
+    for v in out.values():
+        v.sort()
+    return out
 
 
-def _sentence(rng: random.Random, n: int) -> str:
-    return " ".join(_words(rng, n)).capitalize() + "."
+def _distinct_payloads(counts: dict[str, int], seed: int) -> dict[str, list[str]]:
+    """``counts[kind]`` distinct ``sources.transcripts`` payloads per kind,
+    gathered from the pools of as many seeded tables as it takes."""
+    got: dict[str, dict[str, None]] = {k: {} for k in counts}
+    for k in itertools.count():
+        if all(len(got[kind]) >= n for kind, n in counts.items()):
+            break
+        for kind, texts in _pool_payloads(seed * 1_000 + k).items():
+            if kind in got:
+                got[kind].update(dict.fromkeys(texts))
+    return {kind: list(got[kind])[:n] for kind, n in counts.items()}
 
 
-def _html(rng: random.Random, target: int, uid: str) -> str:
-    """Article page with nav/header/aside/footer boilerplate and link farms;
-    ``target`` is the approximate payload size in bytes."""
-    nav = " ".join(f'<a href="/{w}">{w}</a>' for w in _words(rng, 6))
-    head = (f"<html><head><title>{uid}</title></head><body><nav>{nav}</nav>"
-            f"<header><span>{_sentence(rng, 3)}</span></header><article>"
-            f"<h1>{uid} {_sentence(rng, 4)}</h1>")
-    tail = (f'</article><div class="related">'
-            + " ".join(f'<a href="#{w}">{w} {w}</a>' for w in _words(rng, 8))
-            + f"</div><aside>{_sentence(rng, 6)}</aside>"
-            f"<footer>{nav}</footer></body></html>")
-    parts = [head]
-    size = len(head) + len(tail)
+def _large_html(parts: list[str], target: int) -> str:
+    """One page around the ``<article>`` contents of many html payloads."""
+    head, rest = parts[0].split("<article>", 1)
+    tail = rest.split("</article>", 1)[1]
+    body, size, i = [], len(head) + len(tail), 0
     while size < target:
-        r = rng.random()
-        if r < 0.70:
-            block = f"<p>{_sentence(rng, rng.randrange(8, 40))}</p>\n"
-        elif r < 0.85:
-            items = "".join(f"<li>{_sentence(rng, rng.randrange(4, 12))}</li>"
-                            for _ in range(rng.randrange(2, 6)))
-            block = f"<ul>{items}</ul>\n"
-        elif r < 0.93:
-            cells = "".join(f"<td>{w}</td>" for w in _words(rng, 4))
-            block = f"<table><tr>{cells}</tr></table>\n"
-        else:
-            block = ('<div class="promo">'
-                     + " ".join(f'<a href="/{w}">{w}</a>' for w in _words(rng, 5))
-                     + "</div>\n")
-        parts.append(block)
-        size += len(block)
-    parts.append(tail)
-    return "".join(parts)
+        art = parts[i % len(parts)].split("<article>", 1)[1].split("</article>", 1)[0]
+        body.append(art)
+        size += len(art) + 1
+        i += 1
+    return head + "<article>" + "\n".join(body) + "</article>" + tail
 
 
-def _pdf(rng: random.Random, target: int, uid: str) -> str:
-    """Positioned-token pages (``token@x,y``, pages split by form feeds),
-    40% of pages two-column, tokens shuffled so the parser must re-sort."""
-    pages: list[str] = []
-    size = 0
-    first = True
-    while size < target or first:
-        cols = [50.0, 560.0] if rng.random() < 0.4 else [50.0]
-        toks: list[str] = []
-        for x0 in cols:
-            y = 40.0
-            for _ in range(rng.randrange(2, 7)):          # blocks
-                for _ in range(rng.randrange(1, 6)):      # lines
-                    x = x0
-                    words = _words(rng, rng.randrange(3, 9))
-                    if first:
-                        words[0] = uid
-                        first = False
-                    for w in words:
-                        toks.append(f"{w}@{x:.1f},{y:.1f}")
-                        x += 6.0 * (len(w) + 1)
-                    y += 12.0
-                y += 30.0
-                if size + sum(map(len, toks)) >= target and y > 200:
-                    break
-        rng.shuffle(toks)
-        page = "\n".join(toks)
-        pages.append(page)
-        size += len(page) + 2
+def _large_pdf(parts: list[str], target: int) -> str:
+    """Many pdf payloads as the pages of one document (form-feed lines)."""
+    pages, size, i = [], 0, 0
+    while size < target:
+        pages.append(parts[i % len(parts)])
+        size += len(pages[-1]) + 3
+        i += 1
     return "\n\f\n".join(pages)
-
-
-def _plain(rng: random.Random, target: int, uid: str) -> str:
-    r = rng.random()
-    paras: list[str] = []
-    size = 0
-    while size < target or not paras:
-        p = _sentence(rng, rng.randrange(6, 30))
-        paras.append(p)
-        size += len(p) + 2
-    paras[0] = f"{uid} {paras[0]}"
-    body = "\n\n".join(paras)
-    if r < 0.25:
-        keys = _words(rng, 3)
-        inner = ",\n".join(f'  "{k}": "{_sentence(rng, 4)}"' for k in keys)
-        return f'```json\n{{\n  "id": "{uid}",\n{inner}\n}}\n```'
-    if r < 0.35:
-        return "```\n" + body + "\n```"
-    if r < 0.45:
-        return body.replace("\n", "\r\n")
-    if r < 0.55:
-        return "  " + body.replace(" ", "  ") + "\t"
-    if r < 0.70:
-        return "## " + body.replace("\n\n", "\n\n- ", 2)
-    return body
-
-
-def _quantile_sizes(n: int, lo: float, median: float, hi: float, sigma: float) -> np.ndarray:
-    """``n`` sizes at the evenly spaced quantiles of a clipped lognormal: the
-    same sizes for every seed."""
-    from statistics import NormalDist
-
-    z = np.array([NormalDist().inv_cdf((i + 0.5) / n) for i in range(n)])
-    return np.clip(median * np.exp(sigma * z), lo, hi).astype(np.int64)
 
 
 def _skeleton(n_rows: int, seed: int) -> pd.DataFrame:
@@ -214,8 +155,10 @@ def _skeleton(n_rows: int, seed: int) -> pd.DataFrame:
 
 
 def _mixed(n_rows: int, seed: int) -> pd.DataFrame:
+    """Every payload distinct and built by ``sources.transcripts``; kind
+    counts fixed at 40/30/30; 0.1% of the turns are 100 KB-1 MB html/pdf
+    payloads assembled from those payloads."""
     rng = np.random.default_rng([seed, 1])
-    rnd = random.Random(seed)
     table = _skeleton(n_rows, seed)
     edge = table["conv_id"].str.startswith("conv-edge-").to_numpy()
     idx = np.flatnonzero(~edge)
@@ -228,66 +171,60 @@ def _mixed(n_rows: int, seed: int) -> pd.DataFrame:
     rest = np.setdiff1d(idx, large_rows)
     n_html = round(0.4 * n_rows) - (n_large + 1) // 2
     n_pdf = round(0.3 * n_rows) - n_large // 2
-    n_plain = len(rest) - n_html - n_pdf
-    items = sorted(
-        [("html", int(s)) for s in _quantile_sizes(n_html, 400, 1_800, 40_000, 0.8)]
-        + [("pdf", int(s)) for s in _quantile_sizes(n_pdf, 200, 1_400, 40_000, 0.8)]
-        + [("plain", int(s)) for s in _quantile_sizes(n_plain, 20, 300, 20_000, 1.0)],
-        key=lambda kv: kv[1])
+    pool = _distinct_payloads(
+        {"html": n_html, "pdf": n_pdf, "plain": len(rest) - n_html - n_pdf}, seed)
+    items = sorted((p for kind in ("html", "pdf", "plain") for p in pool[kind]),
+                   key=lambda p: (len(p), p))
     # deal the size-sorted payloads across the files in turn, so every file
     # (and every task reading it) gets the same mix of kinds and sizes
     per_file = -(-n_rows // N_FILES)
     rows_of = [list(rest[(rest >= f * per_file) & (rest < (f + 1) * per_file)])
                for f in range(N_FILES)]
-    dealt: list[list[tuple[str, int]]] = [[] for _ in range(N_FILES)]
+    dealt: list[list[str]] = [[] for _ in range(N_FILES)]
     f = 0
     for item in items:
         while len(dealt[f]) == len(rows_of[f]):
             f = (f + 1) % N_FILES
         dealt[f].append(item)
         f = (f + 1) % N_FILES
-    builders = {"html": _html, "pdf": _pdf, "plain": _plain}
     text = table["text"].to_numpy(dtype=object).copy()
     for rows, got in zip(rows_of, dealt):
         for row, i in zip(rows, rng.permutation(len(got))):
-            kind, size = got[i]
-            text[row] = builders[kind](rnd, size, f"u{seed}x{row}")
+            text[row] = got[i]
     for j, (row, size) in enumerate(zip(large_rows, large_sizes)):
-        build = _html if j % 2 == 0 else _pdf
-        text[row] = build(rnd, int(size), f"u{seed}x{row}")
+        kind = "html" if j % 2 == 0 else "pdf"
+        parts = [pool[kind][i] for i in rng.permutation(len(pool[kind]))]
+        text[row] = (_large_html if kind == "html" else _large_pdf)(parts, int(size))
     table["text"] = text
     return table
 
 
-def _kind_of(s: str) -> str:
-    if s.lstrip().startswith("<"):
-        return "html"
-    first = s.strip().split("\n", 1)[0].strip() if s.strip() else ""
-    return "pdf" if _PDF_LINE.match(first) else "plain"
-
-
 def _pooled(n_rows: int, seed: int) -> pd.DataFrame:
+    """95% short plain turns, the rest the table's own 40/30/30 draw; every
+    payload from the seed's ``sources.transcripts`` pools, under 1% of them
+    distinct."""
+    from document_extraction_spark.core.classify import classify_one
+
     rng = np.random.default_rng([seed, 2])
     table = _skeleton(n_rows, seed)
     edge = table["conv_id"].str.startswith("conv-edge-").to_numpy()
     idx = np.flatnonzero(~edge)
-    variants = pd.unique(table.loc[~edge, "text"])
-    by_kind: dict[str, list[str]] = {"html": [], "pdf": [], "plain": []}
-    for v in sorted(variants):
-        by_kind[_kind_of(v)].append(v)
-    short = [v for v in by_kind["plain"] if len(v.encode("utf-8")) <= 300]
-    # distinct payloads stay under 1% of the rows: 0.5% short, 0.17% each other
+    by_kind = _pool_payloads(seed)
+    short = [v for v in by_kind["plain"] if len(v.encode("utf-8")) <= SHORT_BYTES]
+    # distinct payloads stay under 1% of the rows: 0.5% short, 0.17% per kind
     cap = max(4, n_rows // 600)
     short = [short[i] for i in rng.permutation(len(short))[: 3 * cap]]
-    other = ([by_kind["html"][i] for i in rng.permutation(len(by_kind["html"]))[:cap]]
-             + [by_kind["pdf"][i] for i in rng.permutation(len(by_kind["pdf"]))[:cap]])
-    n_short = -(-len(idx) * 85 // 100)
+    capped = {k: [v[i] for i in rng.permutation(len(v))[:cap]] for k, v in by_kind.items()}
+    kinds = np.array([classify_one(t) for t in table["text"].to_numpy()[idx]], dtype=object)
     pick = np.empty(len(idx), dtype=object)
-    pick[:n_short] = np.array(short, dtype=object)[rng.integers(0, len(short), n_short)]
-    pick[n_short:] = np.array(other, dtype=object)[
-        rng.integers(0, len(other), len(idx) - n_short)]
+    for kind, variants in capped.items():
+        rows = np.flatnonzero(kinds == kind)
+        pick[rows] = np.array(variants, dtype=object)[rng.integers(0, len(variants), len(rows))]
+    n_short = -(-len(idx) * round(100 * POOLED_SHORT_FRAC) // 100)
+    rows = rng.permutation(len(idx))[:n_short]
+    pick[rows] = np.array(short, dtype=object)[rng.integers(0, len(short), n_short)]
     text = table["text"].to_numpy(dtype=object).copy()
-    text[idx] = pick[rng.permutation(len(idx))]
+    text[idx] = pick
     table["text"] = text
     return table
 

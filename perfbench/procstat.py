@@ -39,15 +39,20 @@ def tree_pids(root: int | None = None) -> list[int]:
     return out
 
 
-def tree_rss_bytes(pids: list[int]) -> int:
-    total = 0
-    for pid in pids:
-        try:
-            with open(f"/proc/{pid}/statm") as fh:
-                total += int(fh.read().split()[1]) * _PAGE
-        except (OSError, IndexError, ValueError):
-            pass
-    return total
+def rss_bytes(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/statm") as fh:
+            return int(fh.read().split()[1]) * _PAGE
+    except (OSError, IndexError, ValueError):
+        return 0
+
+
+def is_jvm(pid: int) -> bool:
+    try:
+        with open(f"/proc/{pid}/comm") as fh:
+            return fh.read().strip() == "java"
+    except OSError:
+        return False
 
 
 def tree_cpu_s() -> float:
@@ -71,24 +76,41 @@ def host_cpu_ticks() -> tuple[int, int]:
 
 class PeakRss:
     """Samples the summed RSS of the process tree until stopped; use as a
-    context manager around the work to watch."""
+    context manager around the work to watch.  ``peak`` is the peak of the
+    sum; ``peak_jvm`` and ``peak_py`` are the peaks of its JVM part and of
+    the rest (this process, the Python worker daemon and its workers)."""
 
     def __init__(self, interval_s: float = 0.05) -> None:
         self.interval_s = interval_s
-        self.peak = 0
+        self.peak = self.peak_jvm = self.peak_py = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
+    def _sample(self, pids: list[tuple[int, bool]]) -> None:
+        jvm = py = 0
+        for pid, java in pids:
+            if java:
+                jvm += rss_bytes(pid)
+            else:
+                py += rss_bytes(pid)
+        self.peak = max(self.peak, jvm + py)
+        self.peak_jvm = max(self.peak_jvm, jvm)
+        self.peak_py = max(self.peak_py, py)
+
+    @staticmethod
+    def _pids() -> list[tuple[int, bool]]:
+        return [(pid, is_jvm(pid)) for pid in tree_pids()]
+
     def _loop(self) -> None:
-        pids = tree_pids()
+        pids = self._pids()
         n = 0
         while True:
-            self.peak = max(self.peak, tree_rss_bytes(pids))
+            self._sample(pids)
             if self._stop.wait(self.interval_s):
                 return
             n += 1
             if n % 10 == 0:  # workers come and go; rescan the tree twice a second
-                pids = tree_pids()
+                pids = self._pids()
 
     def __enter__(self) -> "PeakRss":
         self._thread.start()
@@ -97,4 +119,4 @@ class PeakRss:
     def __exit__(self, *exc) -> None:
         self._stop.set()
         self._thread.join()
-        self.peak = max(self.peak, tree_rss_bytes(tree_pids()))
+        self._sample(self._pids())

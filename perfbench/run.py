@@ -27,7 +27,6 @@ from __future__ import annotations
 import argparse
 import contextlib
 import inspect
-import itertools
 import json
 import os
 import shutil
@@ -58,15 +57,13 @@ END_TO_END_UNITS = {
     "turns_per_s": "turns/s",
     "job_s": "s",
     "setup_s": "s",
-    "peak_rss_mb": "MB",
+    "py_rss_mb": "MB",
 }
-SETUPS = 3          # session set-ups per run; setup_s is their median
+SETUPS = 2          # cold session set-ups per run; setup_s is their median
 NOOP_RESUMES = 3    # no-op resumes per run; resume_noop_s is their median
 MIN_JOBS = 3        # timed jobs per run even when --seconds is shorter
-WARMUP_SECONDS = 3  # untimed jobs of the workload before the timed ones,
-WARMUP_JOBS = 2     # for this long and at least this many
+WARMUP_JOBS = 2     # untimed jobs of the workload after each set-up
 SCANS = 3           # scan-only passes in the traced run
-DRIVER_MEMORY = "1g"
 clock = time.perf_counter
 
 
@@ -136,15 +133,16 @@ class Tracer:
 # --------------------------------------------------------------------------
 
 def prepare_env() -> None:
-    """Keep every file the run writes inside the checkout, and check that
-    the program is there before anything starts."""
+    """Keep every file the run writes inside the checkout, leave memory to
+    the program's own defaults, and check that the program is there before
+    anything starts."""
     if not os.path.isdir(os.path.join(ROOT, "document_extraction_spark")):
         sys.exit(f"perfbench: no document_extraction_spark package under {ROOT}; "
                  "run from the root of a full checkout")
     tmp = os.path.join(WORK, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
-    os.environ["SPARK_DRIVER_MEMORY"] = DRIVER_MEMORY
+    os.environ.pop("SPARK_DRIVER_MEMORY", None)  # get_spark's default applies
     os.environ.pop("SPARK_LOCAL_DIRS", None)  # it would override spark.local.dir
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["_JAVA_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
@@ -156,9 +154,6 @@ def spark_conf(event_log: str | None) -> dict[str, str]:
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(WORK, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
-        # the whole heap is resident from the start, so peak RSS does not
-        # depend on when the collector chose to grow the heap
-        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -XX:+AlwaysPreTouch",
     }
     if event_log:
         os.makedirs(event_log, exist_ok=True)
@@ -177,6 +172,8 @@ def warmup(spark, warm_src: str, cpus: int) -> None:
 
 
 def start_session(cpus: int, warm_src: str, tracer: Tracer, event_log: str | None = None):
+    """A cold set-up: launches a new JVM (the caller has shut the last one
+    down), builds the session and runs the warm-up pass."""
     from document_extraction_spark import get_spark
 
     with tracer.span("setup"):
@@ -262,6 +259,15 @@ def noop_resumes(spark, src: str, job_dir: str, tracer: Tracer) -> list[float]:
     return out
 
 
+def warm_jobs(kind: str, spark, src: str, out_dir: str, tracer: Tracer) -> None:
+    """Untimed jobs of the workload's own kind.  Job times fall over the
+    first jobs of a fresh JVM while the JIT compiles the planner and the
+    Arrow/parquet paths; keep those out of every timed job."""
+    with tracer.span("warm_jobs"):
+        for _ in range(WARMUP_JOBS):
+            run_job(kind, spark, src, out_dir)
+
+
 def run_job(kind: str, spark, src: str, out_dir: str, between=None) -> tuple[int, float]:
     dst = fresh_dir(os.path.join(out_dir, "out"))
     if kind == "batch":
@@ -343,25 +349,18 @@ def run_workload(args) -> dict:
                   "input " + json.dumps({k: v for k, v in inp["meta"].items()
                                          if k != "oracle_check"}, sort_keys=True)]
 
-        # --- set-up, several times; the first launches the JVM --------------
+        # --- set-up, several times, each in a new JVM -------------------------
         setups = []
         spark = None
         for _ in range(SETUPS):
             if spark is not None:
                 spark.stop()
+                shutdown_jvm()
             spark, gs, wu = start_session(cpus, warm["data"], tracer)
             setups.append((gs, wu))
 
-        # --- warm-up: untimed jobs of the workload's own kind ----------------
-        # Job times fall for the first few jobs of a fresh JVM while the JIT
-        # compiles the planner and the Arrow/parquet paths; keep those out.
         warm_dir = os.path.join(run_dir, "warm")
-        with tracer.span("warm_jobs"):
-            warm_until = clock() + WARMUP_SECONDS
-            for n in itertools.count(1):
-                run_job(kind, spark, src, warm_dir)
-                if n >= WARMUP_JOBS and clock() >= warm_until:
-                    break
+        warm_jobs(kind, spark, src, warm_dir, tracer)
 
         # --- timed closed loop ----------------------------------------------
         samples = []
@@ -372,7 +371,7 @@ def run_workload(args) -> dict:
             try:
                 with tracer.span("job"), procstat.PeakRss() as rss:
                     rec["turns"], rec["job_s"] = run_job(kind, spark, src, rec["dir"])
-                rec["rss_mb"] = rss.peak / 1e6
+                rec["rss_mb"] = (rss.peak / 1e6, rss.peak_jvm / 1e6, rss.peak_py / 1e6)
             except Exception:
                 traceback.print_exc()
                 rec["error"] = True
@@ -398,12 +397,16 @@ def run_workload(args) -> dict:
             "turns_per_s": [s["turns"] / s["job_s"] for s in good],
             "job_s": [s["job_s"] for s in good],
             "setup_s": [gs + wu for gs, wu in setups],
-            "peak_rss_mb": [s["rss_mb"] for s in good],
+            "py_rss_mb": [s["rss_mb"][2] for s in good],
+            # the JVM's share moves by a fifth from run to run with the
+            # collector's heap sizing, so these two are reported, not bounded
+            "peak_rss_mb": [s["rss_mb"][0] for s in good],
+            "jvm_rss_mb": [s["rss_mb"][1] for s in good],
         }
         attempted = len(samples)
         failed = sum(not s["ok"] for s in samples)
         correct = failed == 0
-        for name, unit in END_TO_END_UNITS.items():
+        for name, unit in [*END_TO_END_UNITS.items(), ("peak_rss_mb", "MB"), ("jvm_rss_mb", "MB")]:
             xs = e2e[name]
             report.append(f"{name} {median(xs):.6g} {unit} (median of n={len(xs)}: "
                           + " ".join(f"{x:.4g}" for x in xs) + ")")
@@ -422,6 +425,8 @@ def run_workload(args) -> dict:
             spark = None
             layers["session.get_spark_s"] = median([gs for gs, _ in setups])
             layers["session.warmup_s"] = median([wu for _, wu in setups])
+            layers["session.peak_rss_mb"] = median(e2e["peak_rss_mb"])
+            layers["session.jvm_rss_mb"] = median(e2e["jvm_rss_mb"])
             report.append(f"text_equal_frac {equal_frac:.6g} frac (n=1 traced job, "
                           "full keyed row comparison)")
             attempted += 1
@@ -461,6 +466,8 @@ def run_workload(args) -> dict:
 PER_LAYER_UNITS = {
     "session.get_spark_s": "s",
     "session.warmup_s": "s",
+    "session.peak_rss_mb": "MB",
+    "session.jvm_rss_mb": "MB",
     "sources.scan_s": "s",
     "sources.bytes_read": "B",
     "sources.scan_time_s": "s",
@@ -525,8 +532,11 @@ def traced_run(spark, kind, inp, warm, cpus, tracer, run_dir,
     trace_dir = os.path.join(WORK, "trace", tracer.run_id)
     log_dir = os.path.join(trace_dir, "eventlog")
     spark.stop()
+    shutdown_jvm()
     spark, _, _ = start_session(cpus, warm["data"], tracer, event_log=log_dir)
     sc = spark.sparkContext
+    sc.setJobGroup("warm", "untimed jobs")
+    warm_jobs(kind, spark, src, os.path.join(run_dir, "traced_warm"), tracer)
     m: dict[str, float] = {}
     n_buckets, _ = checkpoint_defaults()
 
@@ -575,11 +585,13 @@ def traced_run(spark, kind, inp, warm, cpus, tracer, run_dir,
 
     log = eventlog.EventLog(log_dir)
     g = log.group("job")
-    m["sources.bytes_read"] = g.sql_metric("size of files read")
-    m["sources.scan_time_s"] = g.sql_metric("scan time")
+    # the input scan only: run() also reads its output back for the lineage
+    kernel_ex = g.kernel_executions()
+    m["sources.bytes_read"] = g.sql_metric("size of files read", executions=kernel_ex)
+    m["sources.scan_time_s"] = g.sql_metric("scan time", executions=kernel_ex)
     kernel = sorted(t["end"] - t["start"] for t in g.kernel_tasks())
     p50 = statistics.median(kernel) if kernel else 0.0
-    m["plans.extract_pipeline.tasks"] = len(g.tasks)
+    m["plans.extract_pipeline.tasks"] = len(kernel)
     m["plans.extract_pipeline.task_s_p50"] = p50
     m["plans.extract_pipeline.task_s_max"] = kernel[-1] if kernel else 0.0
     m["plans.extract_pipeline.skew_ratio"] = kernel[-1] / p50 if p50 else 0.0
