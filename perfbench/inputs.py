@@ -24,19 +24,18 @@ payloads themselves and their order depend on it.
 
 A table is written once as multi-file parquet under the cache directory,
 together with its oracle output (``core.extract.extract_one`` row by row, in
-``ORACLE_PROCS`` subprocesses) and a ``meta.json`` holding its properties and
+``ORACLE_PROCS`` processes) and a ``meta.json`` holding its properties and
 content fingerprint.  Generation is never part of any timed section.
 """
 
 from __future__ import annotations
 
+import concurrent.futures
 import hashlib
 import itertools
 import json
 import os
 import shutil
-import subprocess
-import sys
 
 import numpy as np
 import pandas as pd
@@ -48,6 +47,7 @@ import pyarrow.parquet as pq
 GEN_VERSION = 5
 N_FILES = 8
 ORACLE_PROCS = 4
+GEN_PROCS = 4  # processes that build the mixed table's payload pools
 
 SIZES = {
     # turns per table; "tiny" is the smoke-test size
@@ -106,12 +106,17 @@ def _distinct_payloads(counts: dict[str, int], seed: int) -> dict[str, list[str]
     """``counts[kind]`` distinct ``sources.transcripts`` payloads per kind,
     gathered from the pools of as many seeded tables as it takes."""
     got: dict[str, dict[str, None]] = {k: {} for k in counts}
-    for k in itertools.count():
-        if all(len(got[kind]) >= n for kind, n in counts.items()):
-            break
-        for kind, texts in _pool_payloads(seed * 1_000 + k).items():
-            if kind in got:
-                got[kind].update(dict.fromkeys(texts))
+    # tables are built GEN_PROCS at a time; the result is the same as one at
+    # a time, since later tables only append past the first n of each kind
+    with concurrent.futures.ProcessPoolExecutor(GEN_PROCS) as pool:
+        for k in itertools.count(step=GEN_PROCS):
+            if all(len(got[kind]) >= n for kind, n in counts.items()):
+                break
+            for pools in pool.map(_pool_payloads, range(seed * 1_000 + k,
+                                                        seed * 1_000 + k + GEN_PROCS)):
+                for kind, texts in pools.items():
+                    if kind in got:
+                        got[kind].update(dict.fromkeys(texts))
     return {kind: list(got[kind])[:n] for kind, n in counts.items()}
 
 
@@ -325,19 +330,18 @@ def checksum(table: pa.Table) -> dict:
 
 
 # --------------------------------------------------------------------------
-# oracle: core.extract.extract_one, row by row, in plain subprocesses
+# oracle: core.extract.extract_one, row by row, in ORACLE_PROCS processes
 # --------------------------------------------------------------------------
 
+def _oracle_shard(files: list[str], out: str) -> None:
+    pq.write_table(oracle_rows(files), out)
+
+
 def _run_oracle(files: list[str], out_dir: str) -> None:
-    shards = [files[i::ORACLE_PROCS] for i in range(ORACLE_PROCS)]
-    procs = []
-    for i, shard in enumerate(s for s in shards if s):
-        out = os.path.join(out_dir, f"part-{i:05d}.parquet")
-        procs.append(subprocess.Popen(
-            [sys.executable, os.path.abspath(__file__), "--oracle", out, *shard]))
-    codes = [p.wait() for p in procs]
-    if any(codes):
-        raise RuntimeError(f"oracle subprocesses exited with {codes}")
+    shards = [s for s in (files[i::ORACLE_PROCS] for i in range(ORACLE_PROCS)) if s]
+    outs = [os.path.join(out_dir, f"part-{i:05d}.parquet") for i in range(len(shards))]
+    with concurrent.futures.ProcessPoolExecutor(len(shards)) as pool:
+        list(pool.map(_oracle_shard, shards, outs))
 
 
 def oracle_rows(files: list[str]) -> pa.Table:
@@ -360,11 +364,3 @@ def oracle_rows(files: list[str]) -> pa.Table:
          pa.array(spans, type=SPAN_ARROW), failed],
         schema=ORACLE_SCHEMA,
     )
-
-
-if __name__ == "__main__":
-    # oracle worker: inputs.py --oracle OUT_FILE IN_FILE...
-    if len(sys.argv) < 4 or sys.argv[1] != "--oracle":
-        sys.exit("usage: inputs.py --oracle OUT_FILE IN_FILE...")
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    pq.write_table(oracle_rows(sys.argv[3:]), sys.argv[2])

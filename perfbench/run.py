@@ -7,7 +7,8 @@ and lineage come out.
     python3 perfbench/run.py --smoke
 
 Run from the root of a checkout.  One closed-loop client submits one job at a
-time, back to back, to ``local[<cpus>]``.  Inputs are generated from
+time, back to back, to ``local[<cpus>]``, in each of the two sessions a run
+sets up.  Inputs are generated from
 ``--seed`` and cached under ``.bench_work/`` (see ``inputs.py``); outputs,
 event logs and span files are written there too.  Every job's output is
 checked against the ``core.extract.extract_one`` oracle after the clock
@@ -15,11 +16,12 @@ stops.  The last stdout line is one JSON object with the keys ``correct``,
 ``attempted``, ``failed`` and ``metrics``; the lines before it (``#``) give
 every figure with its unit and sample count and the input's properties.
 
-``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` first repeats
-the untraced jobs, then runs the workload once more with the Spark event log
-on, replays the ``core`` layers single-threaded over the same input, and
-reports the per-layer metrics (listed with the end-to-end metric each should
-move in ``perfbench/README.md``).
+``--trace 0`` reports the end-to-end metrics.  ``--trace 1`` first times
+untraced jobs in one session, then runs the workload once more in a second
+session with the Spark event log on, replays the ``core`` layers
+single-threaded over the same input, and reports the per-layer metrics
+(listed with the end-to-end metric each should move in
+``perfbench/README.md``).
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ END_TO_END_UNITS = {
 }
 SETUPS = 2          # cold session set-ups per run; setup_s is their median
 NOOP_RESUMES = 3    # no-op resumes per run; resume_noop_s is their median
-MIN_JOBS = 3        # timed jobs per run even when --seconds is shorter
+MIN_JOBS = 3        # timed jobs per session even when --seconds is shorter
 WARMUP_JOBS = 2     # untimed jobs of the workload after each set-up
 SCANS = 3           # scan-only passes in the traced run
 clock = time.perf_counter
@@ -268,6 +270,25 @@ def warm_jobs(kind: str, spark, src: str, out_dir: str, tracer: Tracer) -> None:
             run_job(kind, spark, src, out_dir)
 
 
+def timed_jobs(kind: str, spark, src: str, out_dir: str, seconds: float,
+               tracer: Tracer) -> list[dict]:
+    """The closed loop: jobs back to back for ``seconds`` (at least
+    ``MIN_JOBS``), each with its wall time, turns and peak RSS."""
+    samples = []
+    deadline = clock() + seconds
+    while len(samples) < MIN_JOBS or clock() < deadline:
+        rec = {"dir": os.path.join(out_dir, f"job{len(samples)}")}
+        try:
+            with tracer.span("job"), procstat.PeakRss() as rss:
+                rec["turns"], rec["job_s"] = run_job(kind, spark, src, rec["dir"])
+            rec["rss_mb"] = (rss.peak / 1e6, rss.peak_jvm / 1e6, rss.peak_py / 1e6)
+        except Exception:
+            traceback.print_exc()
+            rec["error"] = True
+        samples.append(rec)
+    return samples
+
+
 def run_job(kind: str, spark, src: str, out_dir: str, between=None) -> tuple[int, float]:
     dst = fresh_dir(os.path.join(out_dir, "out"))
     if kind == "batch":
@@ -349,35 +370,29 @@ def run_workload(args) -> dict:
                   "input " + json.dumps({k: v for k, v in inp["meta"].items()
                                          if k != "oracle_check"}, sort_keys=True)]
 
-        # --- set-up, several times, each in a new JVM -------------------------
-        setups = []
+        # --- set-ups, each in a new JVM, each followed by timed jobs ----------
+        # Job times differ more from one JVM, and one stretch of a shared
+        # host's time, to the next than from one job to the next, so the timed
+        # jobs are spread over every session the run starts for setup_s.  A traced run's last set-up is the
+        # event-log session's (in traced_run), so it times one session less.
+        setups, samples = [], []
         spark = None
-        for _ in range(SETUPS):
+        steal = total = 0
+        sessions = SETUPS - 1 if args.trace else SETUPS
+        for i in range(sessions):
             if spark is not None:
                 spark.stop()
                 shutdown_jvm()
             spark, gs, wu = start_session(cpus, warm["data"], tracer)
             setups.append((gs, wu))
-
-        warm_dir = os.path.join(run_dir, "warm")
-        warm_jobs(kind, spark, src, warm_dir, tracer)
-
-        # --- timed closed loop ----------------------------------------------
-        samples = []
-        steal0, total0 = procstat.host_cpu_ticks()
-        deadline = clock() + args.seconds
-        while len(samples) < MIN_JOBS or clock() < deadline:
-            rec = {"dir": os.path.join(run_dir, f"job{len(samples)}")}
-            try:
-                with tracer.span("job"), procstat.PeakRss() as rss:
-                    rec["turns"], rec["job_s"] = run_job(kind, spark, src, rec["dir"])
-                rec["rss_mb"] = (rss.peak / 1e6, rss.peak_jvm / 1e6, rss.peak_py / 1e6)
-            except Exception:
-                traceback.print_exc()
-                rec["error"] = True
-            samples.append(rec)
-        steal1, total1 = procstat.host_cpu_ticks()
-        steal_frac = (steal1 - steal0) / max(total1 - total0, 1)
+            warm_dir = os.path.join(run_dir, f"warm{i}")
+            warm_jobs(kind, spark, src, warm_dir, tracer)
+            steal0, total0 = procstat.host_cpu_ticks()
+            samples += timed_jobs(kind, spark, src, os.path.join(run_dir, f"s{i}"),
+                                  args.seconds / sessions, tracer)
+            steal1, total1 = procstat.host_cpu_ticks()
+            steal, total = steal + steal1 - steal0, total + total1 - total0
+        steal_frac = steal / max(total, 1)
 
         # --- checkpoint_resume: no-op resumes over the warm job's checkpoint -
         noops = []
@@ -392,6 +407,14 @@ def run_workload(args) -> dict:
                 s["ok"] = not s.get("error") and job_ok(
                     s, output_checksum(os.path.join(s["dir"], "out")), inp["meta"]["oracle_check"])
         good = [s for s in samples if s["ok"]] or [s for s in samples if "job_s" in s]
+
+        if args.trace:
+            layers, equal_frac, traced_setup = traced_run(
+                spark, kind, inp, warm, cpus, tracer, run_dir,
+                median([s["job_s"] for s in good]),
+                median([s["turns"] / s["job_s"] for s in good]))
+            spark = None
+            setups.append(traced_setup)
 
         e2e = {
             "turns_per_s": [s["turns"] / s["job_s"] for s in good],
@@ -419,10 +442,6 @@ def run_workload(args) -> dict:
                       "took during the timed jobs)")
 
         if args.trace:
-            layers, equal_frac = traced_run(spark, kind, inp, warm, cpus, tracer,
-                                            run_dir, median(e2e["job_s"]),
-                                            median(e2e["turns_per_s"]))
-            spark = None
             layers["session.get_spark_s"] = median([gs for gs, _ in setups])
             layers["session.warmup_s"] = median([wu for _, wu in setups])
             layers["session.peak_rss_mb"] = median(e2e["peak_rss_mb"])
@@ -522,8 +541,9 @@ PER_LAYER_UNITS = {
 
 def traced_run(spark, kind, inp, warm, cpus, tracer, run_dir,
                untraced_job_s, untraced_turns_per_s):
-    """Re-run the workload with the event log on; returns (per-layer
-    metrics, text_equal_frac).  Stops the session it is given."""
+    """Re-run the workload in a new session with the event log on; returns
+    (per-layer metrics, text_equal_frac, that session's (get_spark, warm-up)
+    seconds).  Stops the session it is given."""
     import pyarrow.parquet as pq
     from document_extraction_spark.plans import checkpoint as C
     from document_extraction_spark.plans import extract_pipeline as P
@@ -533,7 +553,7 @@ def traced_run(spark, kind, inp, warm, cpus, tracer, run_dir,
     log_dir = os.path.join(trace_dir, "eventlog")
     spark.stop()
     shutdown_jvm()
-    spark, _, _ = start_session(cpus, warm["data"], tracer, event_log=log_dir)
+    spark, gs, wu = start_session(cpus, warm["data"], tracer, event_log=log_dir)
     sc = spark.sparkContext
     sc.setJobGroup("warm", "untimed jobs")
     warm_jobs(kind, spark, src, os.path.join(run_dir, "traced_warm"), tracer)
@@ -637,7 +657,7 @@ def traced_run(spark, kind, inp, warm, cpus, tracer, run_dir,
 
     tracer.spans.extend(g.spans(job_span, tracer.run_id))
     tracer.spans.extend(core_spans)
-    return m, equal_frac
+    return m, equal_frac, (gs, wu)
 
 
 # --------------------------------------------------------------------------
